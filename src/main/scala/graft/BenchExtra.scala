@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
-/** Round-6 optimization diagnostics — SEPARATE from the frozen driver bench
+/** The one diagnostics main — SEPARATE from the frozen driver bench
   * (guide §1.4: isolate expensive queries with the noop sink; §1.5: label
   * jobs). Not part of the driver contract; Bench.scala stays byte-identical.
+  * Per-stage flagship numbers come from `perfbench/run.py --trace 1`,
+  * scaling efficiency from `tools/scaling.sh`.
   *
   * Modes (first arg):
   *   time <reps> <query...>   — noop-timed reps per query, resetStorage
@@ -33,7 +36,7 @@ object BenchExtra {
         val r = reps.toInt
         // one warm-up on the cheapest query (JIT/codegen), as the bench does
         try Bench.exec(SparkEntry.queries("q_tumbling_hour")(spark, sfDir))
-        catch { case _: Throwable => }
+        catch { case NonFatal(_) => }
         Bench.resetStorage(spark)
         val all = (if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names)
         all.foreach { n =>

@@ -23,9 +23,10 @@ import graft.features.{BehaviorBinding, FeatureLayers}
   *
   * Scale shape: stages 1-2 are one shuffle (hash by conv+window with partial
   * aggregation); stages 3-4 one window sort per conversation; stage 5 the
-  * range-partitioned merge. The state table is |windows| rows — typically
-  * 100-1000× smaller than the turn table, which is what makes the final
-  * as-of join cheap relative to the scan.
+  * native `AsOfMergeExec` over both sides hash-clustered by conversation.
+  * The state table is |windows| rows — typically 100-1000× smaller than the
+  * turn table, which is what makes the final as-of join cheap relative to
+  * the scan.
   */
 object PitPipeline {
 

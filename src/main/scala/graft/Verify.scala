@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,11 +15,19 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, sfDir, outDir)
+    spark.stop()
+  }
+
+  /** Write every query over the tables in `sfDir` to `outDir/<name>` and the
+    * oracle SQL to `outDir/oracle_sql.json` (`tools/check_oracle.py` input).
+    * A failing query is logged and skipped; the compare reports it missing. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -37,6 +46,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

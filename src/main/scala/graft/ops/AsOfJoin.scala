@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.types._
-import scala.collection.mutable.ArrayBuffer
 
 /** Backward (point-in-time) as-of join — the engine's flagship operator.
   *
@@ -20,22 +20,23 @@ import scala.collection.mutable.ArrayBuffer
   *  1. `windowed` — union-tag + `last(ignoreNulls)` over a cumulative window.
   *     Declarative; Catalyst plans one exchange + one sort. The SQL-oracle
   *     form (DuckDB `ASOF JOIN` cross-checks it).
-  *  2. `merged` — hash-repartition on the key + secondary sort (key, ts,
-  *     side) + a single-pass `mapPartitions` merge carrying last-seen
-  *     payload. One shuffle, NO range-sampling pass, O(1) state per key.
-  *  2b. `mergedScalable` — RANGE-partitioned on (key, ts) + boundary
+  *  2. [[graft.plans.AsOfPlan.asOfJoin]] — the native Catalyst operator:
+  *     both sides hash-clustered on the key and sorted (key, ts, seq) by
+  *     EnsureRequirements, then a single-pass merge carrying the last-seen
+  *     payload. One shuffle per side, O(1) state per key.
+  *  3. `mergedScalable` — RANGE-partitioned on (key, ts) + boundary
   *     stitching: the explicit skew path for mega-keys (see its doc).
-  *  3. `broadcastIndex` — when the right side is a SMALL timestamp index:
+  *  4. `broadcastIndex` — when the right side is a SMALL timestamp index:
   *     broadcast sorted per-key arrays and binary-search per left row. No
   *     shuffle of the big side at all — the 100 TB scan stays map-only.
   *
-  * Shuffle-volume note: both sides are packed as (key, tsUs, side, payload
-  * STRUCT) before the union — a left row carries ONE null struct slot, not
-  * |payload| null columns, which at 50+ payload columns cuts the sorted
-  * bytes by ~5× versus the naive wide union.
+  * Shuffle-volume note: `windowed` and `mergedScalable` pack both sides as
+  * (key, tsUs, side, payload STRUCT) before the union — a left row carries
+  * ONE null struct slot, not |payload| null columns, which at 50+ payload
+  * columns cuts the sorted bytes by ~5× versus the naive wide union.
   *
-  * At cluster scale the choice is mechanical: (3) if right fits the
-  * broadcast threshold; (2b) when a key can dominate a partition; else (2);
+  * At cluster scale the choice is mechanical: (4) if right fits the
+  * broadcast threshold; (3) when a key can dominate a partition; else (2);
   * (1) as the semantic oracle.
   */
 object AsOfJoin {
@@ -65,12 +66,22 @@ object AsOfJoin {
     * instead of the round-5 rank window: the window form shuffled EVERY
     * right row and then sorted each (key, ts) group; the agg form collapses
     * duplicate groups before the exchange (guide §2.3 "aggregate before you
-    * shuffle") and plans no sort at all. Deterministic: the struct compares
-    * rightSeq first, so the greatest-seq row wins exactly as before; a
-    * duplicate-seq tie resolves by payload order (the window's row_number
-    * tie was input-order, i.e. nondeterministic). */
+    * shuffle"). It is not sort-free: a struct buffer is not
+    * hash-aggregatable, so Spark plans a SortAggregate that sorts by
+    * (key, ts) on both sides of the exchange. Deterministic: the struct compares rightSeq first, so the
+    * greatest-seq row wins exactly as before; a duplicate-seq tie resolves
+    * by payload order (the window's row_number tie was input-order, i.e.
+    * nondeterministic). The struct must be orderable, so every payload
+    * column must be too: a map-typed payload fails fast here, naming the
+    * column, instead of at analysis. */
   private def dedupRight(right: DataFrame, key: String, ts: String, rightSeq: String,
                          payload: Seq[String]): DataFrame = {
+    (rightSeq +: payload).foreach { c =>
+      val dt = right.schema(c).dataType
+      require(RowOrdering.isOrderable(dt),
+        s"AsOfJoin: payload column '$c' has unorderable type $dt — the right-side " +
+          "dedup orders by max(struct(rightSeq, payload...)); drop or convert the column")
+    }
     val packedCols = (rightSeq +: payload.filterNot(_ == rightSeq)).map(col)
     val winner = right.select((Seq(key, ts, rightSeq) ++ payload).distinct.map(col): _*)
       .groupBy(col(key), col(ts))
@@ -118,68 +129,13 @@ object AsOfJoin {
         payload.map(pc => col(s"__p.$pc").as(s"$prefix$pc")): _*)
   }
 
-  /** Variant 2 — hash-partitioned, secondary-sorted single-pass merge.
+  /** Variant 3 — SKEW-PROOF range-partitioned merge with boundary stitching.
     *
-    * The merge itself runs at the InternalRow level (no external Row
-    * conversion): per input row the only allocations are one UnsafeRow copy
-    * per EMITTED row and one struct copy per right row — the external-Row
-    * version allocated ~|columns| boxed objects per row and was GC-bound.
-    */
-  def merged(left: DataFrame, right: DataFrame, key: String, ts: String,
-             rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-             numPartitions: Int = 0, dedup: Boolean = true): DataFrame = {
-    val spark = left.sparkSession
-    requireKeyType(left, key, "merged")
-    val p = pack(left, right, key, ts, rightSeq, payload, dedup)
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    // hash partitioning keeps every key inside one partition (all the merge
-    // needs) without range partitioning's extra sampling job over the union
-    val sorted = p.union
-      .repartition(parts, col("__k"))
-      .sortWithinPartitions(col("__k"), col("__t"), col("__side"))
-    val out = outSchema(p.lStructType, p.pStructType, prefix)
-    val keyType = sorted.schema("__k").dataType
-    val nL = p.lStructType.size
-    val nP = p.pStructType.size
-    val rdd = sorted.queryExecution.toRdd.mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(out)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val nullPay = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nP)
-      var curKey: Any = null
-      var haveKey = false
-      var lastPay: org.apache.spark.sql.catalyst.InternalRow = null
-      it.flatMap { row =>
-        val k = row.get(0, keyType) // UnsafeRow-backed value; copy on retain
-        if (!haveKey || k != curKey) {
-          curKey = k match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.clone()
-            case other => other
-          }
-          haveKey = true
-          lastPay = null
-        }
-        if (row.getInt(2) == 0) { // right row: retain a copy of its payload
-          lastPay = row.getStruct(4, nP).copy()
-          Iterator.empty
-        } else {
-          val l = row.getStruct(3, nL)
-          joined(l, if (lastPay == null) nullPay else lastPay)
-          Iterator.single(proj(joined).copy(): org.apache.spark.sql.catalyst.InternalRow)
-        }
-      }
-    }
-    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, out)
-  }
-
-  /** Variant 2b — SKEW-PROOF range-partitioned merge with boundary stitching.
-    *
-    * `merged` keeps each key in one partition, so one mega-conversation (a
-    * key holding, say, 50% of all rows) lands on ONE task — the classic skew
-    * failure the north rule calls out. This variant range-partitions by
-    * (key, ts), letting a huge key span MANY partitions, and repairs
-    * correctness with a two-pass prefix carry:
+    * `AsOfPlan.asOfJoin` keeps each key in one partition, so one
+    * mega-conversation (a key holding, say, 50% of all rows) lands on ONE
+    * task — the classic skew failure the north rule calls out. This variant
+    * range-partitions by (key, ts), letting a huge key span MANY partitions,
+    * and repairs correctness with a two-pass prefix carry:
     *
     *   pass 1 (cheap scan): each partition reports the last-seen right-row
     *     payload of its LAST key — the only state that can flow across a
@@ -190,8 +146,8 @@ object AsOfJoin {
     *
     * Parallel-prefix-sum shape: work is proportional to rows per PARTITION,
     * not rows per KEY. Both passes scan the same sorted shuffle output
-    * (persisted). Property-tested identical to `merged` incl. mega-key
-    * fixtures.
+    * (persisted). Property-tested identical to the other variants incl.
+    * mega-key fixtures.
     */
   def mergedScalable(left: DataFrame, right: DataFrame, key: String, ts: String,
                      rightSeq: String, payload: Seq[String], prefix: String = "asof_",
@@ -285,10 +241,10 @@ object AsOfJoin {
     org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, out)
   }
 
-  /** Variant 3 — broadcast per-key sorted timestamp index + binary search.
+  /** Variant 4 — broadcast per-key sorted timestamp index + binary search.
     * Right side must be collect-ably small (an INDEX, not a fact table):
     * `maxIndexRows` guards the driver — exceeding it fails fast with a
-    * pointer at merged/mergedScalable instead of OOMing at 100× data.
+    * pointer at AsOfPlan.asOfJoin/mergedScalable instead of OOMing at 100× data.
     * Key must be string/integral (external-Row index values are compared
     * against InternalRow probe values; date/timestamp/decimal externals
     * don't equal their internal representations). */
@@ -307,7 +263,7 @@ object AsOfJoin {
     val collected = r.limit(maxIndexRows + 1).collect()
     require(collected.length <= maxIndexRows,
       s"AsOfJoin.broadcastIndex: right side exceeds maxIndexRows=$maxIndexRows " +
-        "(deduped) — this variant is for small indexes; use merged/mergedScalable")
+        "(deduped) — this variant is for small indexes; use AsOfPlan.asOfJoin/mergedScalable")
     val index: Map[Any, (Array[Long], Array[Row])] =
       collected.groupBy(_.get(0)).map { case (k, rows) =>
         val sortedRows = rows.sortBy(_.getLong(1))

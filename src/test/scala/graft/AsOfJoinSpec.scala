@@ -47,7 +47,6 @@ class AsOfJoinSpec extends SparkSpec {
 
   private val variants: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
     "windowed" -> ((l, r) => AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
-    "merged" -> ((l, r) => AsOfJoin.merged(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
     "broadcastIndex" -> ((l, r) => AsOfJoin.broadcastIndex(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
     "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))))
 
@@ -100,7 +99,8 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("zero leakage: mutating right rows strictly after an anchor never changes it") {
     val (left, right) = scenario(9L, nKeys = 4, nLeft = 80, nRight = 40)
-    val base = run(variants(1)._2, left, right)
+    val planned = variants.toMap.apply("planned")
+    val base = run(planned, left, right)
     // shift every right row that is strictly after ALL anchors of its key
     val maxAnchor = left.groupBy(_.user_id).view.mapValues(_.map(_.ts.getTime).max).toMap
     val mutated = right.map { r =>
@@ -108,7 +108,7 @@ class AsOfJoinSpec extends SparkSpec {
         r.copy(value = r.value + 999.0, event_id = r.event_id + 5000)
       else r
     }
-    assert(run(variants(1)._2, left, mutated) == base)
+    assert(run(planned, left, mutated) == base)
   }
 
   test("no right rows for a key → null payload") {
@@ -158,8 +158,6 @@ class AsOfJoinSpec extends SparkSpec {
       assert(fromWindowed(i.toLong).contains(1000L), s"null anchor $i"))
     assert(fromWindowed(1L).contains(1001L))
     for ((name, f) <- Seq(
-      "merged" -> ((l: DataFrame, r: DataFrame) =>
-        AsOfJoin.merged(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
       "mergedScalable" -> ((l: DataFrame, r: DataFrame) =>
         AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
           numPartitions = 8)),
@@ -196,8 +194,33 @@ class AsOfJoinSpec extends SparkSpec {
     val binKey = (df: DataFrame) => df.withColumn("user_id",
       col("user_id").cast("string").cast("binary"))
     intercept[IllegalArgumentException] {
-      AsOfJoin.merged(binKey(left.toDF()), binKey(right.toDF()), "user_id", "ts",
+      graft.plans.AsOfPlan.asOfJoin(binKey(left.toDF()), binKey(right.toDF()), "user_id", "ts",
         "event_id", Seq("event_id", "value"))
     }
+    intercept[IllegalArgumentException] {
+      AsOfJoin.mergedScalable(binKey(left.toDF()), binKey(right.toDF()), "user_id", "ts",
+        "event_id", Seq("event_id", "value"))
+    }
+  }
+
+  test("unorderable (map) payload: dedup variants fail fast naming the column; planned joins") {
+    import org.apache.spark.sql.functions.{col, map, lit}
+    val left = Seq(L(1, 10, t(100)), L(2, 11, t(100))).toDF()
+    val right = Seq(R(1, t(50), 1001, 5.0), R(1, t(50), 1002, 7.0)).toDF()
+      .withColumn("tags", map(lit("v"), col("value")))
+    Seq[(String, () => DataFrame)](
+      "windowed" -> (() => AsOfJoin.windowed(left, right, "user_id", "ts", "event_id", Seq("tags"))),
+      "mergedScalable" -> (() =>
+        AsOfJoin.mergedScalable(left, right, "user_id", "ts", "event_id", Seq("tags")))
+    ).foreach { case (name, f) =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("'tags'") && e.getMessage.contains("MapType"), s"$name: ${e.getMessage}")
+    }
+    // the native operator has no dedup aggregate: the sort carries the
+    // greatest-seq payload without ever comparing payloads
+    val got = graft.plans.AsOfPlan.asOfJoin(left, right, "user_id", "ts", "event_id", Seq("tags"))
+      .collect().map(r => r.getLong(r.fieldIndex("event_id")) ->
+        Option(r.getMap[String, Double](r.fieldIndex("asof_tags"))).map(_.toMap)).toMap
+    assert(got == Map(10L -> Some(Map("v" -> 7.0)), 11L -> None))
   }
 }

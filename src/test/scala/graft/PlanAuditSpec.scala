@@ -76,6 +76,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Scan ExistingRDD"), s"opaque RDD boundary present:\n$p")
   }
 
+  test("q_asof_join runs on the native as-of operator") {
+    val p = SparkEntry.queries("q_asof_join")(spark, dir).queryExecution.executedPlan.toString
+    assert(p.contains("AsOfMerge"), s"native as-of missing:\n$p")
+  }
+
   // q_feature_importance constructs by TRAINING a model (driver-side
   // artifact; its final plan is a LocalTableScan) — pointless to plan-audit
   // and expensive to build twice, so both full-surface sweeps skip it.
