@@ -104,7 +104,7 @@ object SparkEntry {
     "q_asof_windowed" -> ((s, dir) =>
       asofVariant(s, dir, AsOfJoin.windowed(_, _, _, _, _, _, _))),
     "q_asof_bcast" -> ((s, dir) =>
-      asofVariant(s, dir, AsOfJoin.broadcastIndex(_, _, _, _, _, _, _))),
+      asofVariant(s, dir, graft.plans.AsOfPlan.asOfJoin(_, _, _, _, _, _, _))),
     "q_asof_scalable" -> ((s, dir) =>
       asofVariant(s, dir, AsOfJoin.mergedScalable(_, _, _, _, _, _, _))),
     "q_asof_planned" -> ((s, dir) =>

@@ -125,12 +125,15 @@ object Backfill {
     val computed: Map[Int, Checkpoint] =
       if (maxConcurrent <= 1) todo.map(b => b -> processBucket(b)).toMap
       else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrent)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try Await.result(
-          Future.sequence(todo.map(b => Future(b -> processBucket(b)))),
-          scala.concurrent.duration.Duration.Inf).toMap
+        import java.util.concurrent.{Callable, ExecutionException, Executors}
+        val pool = Executors.newFixedThreadPool(maxConcurrent)
+        // submit every bucket up front, then join in bucket order: no
+        // completion callback is ever scheduled on the pool once it drains
+        try todo.map(b => b -> pool.submit(new Callable[Checkpoint] {
+            def call(): Checkpoint = processBucket(b)
+          })).map { case (b, f) =>
+            try b -> f.get() catch { case e: ExecutionException => throw e.getCause }
+          }.toMap
         finally {
           // on failure, DRAIN in-flight buckets before surfacing it: a live
           // task must not race a caller's retry over the same tmp dirs
@@ -155,13 +158,14 @@ object Backfill {
     spark.read.parquet(committed.map(b => s"$outRoot/bucket=$b"): _*)
   }
 
-  /** Aggregate per-partition metrics into one summary line. */
-  def metricsJson(cs: Seq[Checkpoint]): String = {
+  /** Aggregate per-partition metrics into one summary line. The summary's
+    * time is `wallMs`, the wall clock of the run that computed `cs`: pooled
+    * buckets overlap, so the sum of their times would understate throughput. */
+  def metricsJson(cs: Seq[Checkpoint], wallMs: Long): String = {
     val rows = cs.map(_.inputRows).sum
-    val ms = cs.map(_.elapsedMs).sum
     val per = cs.map(c => s"""{"bucket":${c.bucket},"rows":${c.inputRows},""" +
       s""""ms":${c.elapsedMs},"turnsPerSec":${c.turnsPerSec}}""").mkString("[", ",", "]")
-    s"""{"buckets":${cs.size},"inputRows":$rows,"elapsedMs":$ms,""" +
-      s""""turnsPerSec":${if (ms == 0) 0.0 else rows * 1000.0 / ms},"perPartition":$per}"""
+    s"""{"buckets":${cs.size},"inputRows":$rows,"elapsedMs":$wallMs,""" +
+      s""""turnsPerSec":${if (wallMs == 0) 0.0 else rows * 1000.0 / wallMs},"perPartition":$per}"""
   }
 }

@@ -39,12 +39,16 @@ object BackfillMain {
       IcebergLite.append(spark, tableRoot, turns.toDF(), "conv_id", buckets)
     }
     val binding = BehaviorBinding("user", "assistant", "system", "tool")
+    val prior = Backfill.completed(outRoot)
+    val t0 = System.nanoTime()
     val cks = Backfill.run(spark, tableRoot, snap, outRoot,
       df => PitPipeline.anchorFeatures(
         df.select(col("conv_id"), col("turn_idx"), col("role"), col("ts")),
         TranscriptCols.turns, Turn.roles, binding, 3600L),
       crashAfter = crashAfter, maxConcurrent = pool)
-    val json = Backfill.metricsJson(cks)
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    // the summary covers the buckets THIS run computed: a resume reuses the rest
+    val json = Backfill.metricsJson(cks.filterNot(c => prior.get(c.bucket).contains(c)), wallMs)
     Files.writeString(Paths.get(s"$work/metrics.json"), json)
     println(json)
     spark.stop()

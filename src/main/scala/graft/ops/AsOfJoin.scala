@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.types._
 
 /** Backward (point-in-time) as-of join — the engine's flagship operator.
@@ -14,7 +13,7 @@ import org.apache.spark.sql.types._
   * wins (deterministic tiebreak). Zero temporal leakage by construction:
   * no right row with ts' > ts can ever reach a left row.
   *
-  * Spark has no built-in as-of join, so four equivalent implementations are
+  * Spark has no built-in as-of join, so three equivalent implementations are
   * provided (property-tested identical — SURVEY §7.4.5):
   *
   *  1. `windowed` — union-tag + `last(ignoreNulls)` over a cumulative window.
@@ -26,28 +25,26 @@ import org.apache.spark.sql.types._
   *     payload. One shuffle per side, O(1) state per key.
   *  3. `mergedScalable` — RANGE-partitioned on (key, ts) + boundary
   *     stitching: the explicit skew path for mega-keys (see its doc).
-  *  4. `broadcastIndex` — when the right side is a SMALL timestamp index:
-  *     broadcast sorted per-key arrays and binary-search per left row. No
-  *     shuffle of the big side at all — the 100 TB scan stays map-only.
+  *
+  * All three take the greatest-seq tiebreak from their (key, ts, side, seq)
+  * sort alone, never comparing payloads, so any payload type joins.
   *
   * Shuffle-volume note: `windowed` and `mergedScalable` pack both sides as
-  * (key, tsUs, side, payload STRUCT) before the union — a left row carries
+  * (key, tsUs, side, payload STRUCT, seq) before the union — a left row carries
   * ONE null struct slot, not |payload| null columns, which at 50+ payload
   * columns cuts the sorted bytes by ~5× versus the naive wide union.
   *
-  * At cluster scale the choice is mechanical: (4) if right fits the
-  * broadcast threshold; (3) when a key can dominate a partition; else (2);
-  * (1) as the semantic oracle.
+  * At cluster scale the choice is mechanical: (3) when a key can dominate a
+  * partition; else (2); (1) as the semantic oracle.
   */
 object AsOfJoin {
 
   /** Key types the InternalRow merge variants support. The merges detect
     * key-group changes with Java equals on InternalRow-extracted values,
     * which is value-equality for UTF8String and boxed primitives but
-    * REFERENCE equality for BinaryType (Array[Byte]) — and broadcastIndex
-    * additionally compares external-Row values against internal ones.
-    * Restricting to these types makes both comparisons sound; anything else
-    * fails fast instead of silently dropping payloads. */
+    * REFERENCE equality for BinaryType (Array[Byte]). Restricting to these
+    * types makes the comparison sound; anything else fails fast instead of
+    * silently dropping payloads. */
   private val SupportedKeyTypes: Set[DataType] = Set(
     StringType, ByteType, ShortType, IntegerType, LongType, BooleanType,
     DateType, TimestampType, TimestampNTZType)
@@ -60,54 +57,26 @@ object AsOfJoin {
         "compare by reference and silently mismatch)")
   }
 
-  /** Deduplicate right to one row per (key, ts): greatest rightSeq wins.
-    *
-    * One map-side-combined aggregate (`max(struct(rightSeq, payload...))`)
-    * instead of the round-5 rank window: the window form shuffled EVERY
-    * right row and then sorted each (key, ts) group; the agg form collapses
-    * duplicate groups before the exchange (guide §2.3 "aggregate before you
-    * shuffle"). It is not sort-free: a struct buffer is not
-    * hash-aggregatable, so Spark plans a SortAggregate that sorts by
-    * (key, ts) on both sides of the exchange. Deterministic: the struct compares rightSeq first, so the
-    * greatest-seq row wins exactly as before; a duplicate-seq tie resolves
-    * by payload order (the window's row_number tie was input-order, i.e.
-    * nondeterministic). The struct must be orderable, so every payload
-    * column must be too: a map-typed payload fails fast here, naming the
-    * column, instead of at analysis. */
-  private def dedupRight(right: DataFrame, key: String, ts: String, rightSeq: String,
-                         payload: Seq[String]): DataFrame = {
-    (rightSeq +: payload).foreach { c =>
-      val dt = right.schema(c).dataType
-      require(RowOrdering.isOrderable(dt),
-        s"AsOfJoin: payload column '$c' has unorderable type $dt — the right-side " +
-          "dedup orders by max(struct(rightSeq, payload...)); drop or convert the column")
-    }
-    val packedCols = (rightSeq +: payload.filterNot(_ == rightSeq)).map(col)
-    val winner = right.select((Seq(key, ts, rightSeq) ++ payload).distinct.map(col): _*)
-      .groupBy(col(key), col(ts))
-      .agg(max(struct(packedCols: _*)).as("__win"))
-    winner.select(col(key) +: col(ts) +: payload.map(p => col(s"__win.$p").as(p)): _*)
-  }
-
-  /** Internal: both sides packed to (__k, __t, __side, __l struct, __p struct). */
+  /** Internal: both sides packed to (__k, __t, __side, __l struct, __p struct,
+    * __s = rightSeq; null on left rows, which `__side` already orders). */
   private final case class Packed(
       union: DataFrame, lStructType: StructType, pStructType: StructType)
 
   private def pack(left: DataFrame, right: DataFrame, key: String, ts: String,
-                   rightSeq: String, payload: Seq[String], dedup: Boolean): Packed = {
-    val r = if (dedup) dedupRight(right, key, ts, rightSeq, payload)
-      else right.select((Seq(key, ts) ++ payload).map(col): _*)
+                   rightSeq: String, payload: Seq[String]): Packed = {
     val lTagged = left.select(
       col(key).as("__k"), micros(col(ts)).as("__t"), lit(1).as("__side"),
       struct(left.columns.map(col): _*).as("__l"),
       lit(null).cast(StructType(payload.map(p =>
-        StructField(p, r.schema(p).dataType, nullable = true)))).as("__p"))
+        StructField(p, right.schema(p).dataType, nullable = true)))).as("__p"),
+      lit(null).cast(right.schema(rightSeq).dataType).as("__s"))
     val lStructType = lTagged.schema("__l").dataType.asInstanceOf[StructType]
     val pStructType = lTagged.schema("__p").dataType.asInstanceOf[StructType]
-    val rTagged = r.select(
+    val rTagged = right.select(
       col(key).as("__k"), micros(col(ts)).as("__t"), lit(0).as("__side"),
       lit(null).cast(lStructType).as("__l"),
-      struct(payload.map(col): _*).as("__p"))
+      struct(payload.map(col): _*).as("__p"),
+      col(rightSeq).as("__s"))
     Packed(lTagged.unionByName(rTagged), lStructType, pStructType)
   }
 
@@ -116,10 +85,9 @@ object AsOfJoin {
 
   /** Variant 1 — declarative window fill. */
   def windowed(left: DataFrame, right: DataFrame, key: String, ts: String,
-               rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-               dedup: Boolean = true): DataFrame = {
-    val p = pack(left, right, key, ts, rightSeq, payload, dedup)
-    val w = Window.partitionBy(col("__k")).orderBy(col("__t"), col("__side"))
+               rightSeq: String, payload: Seq[String], prefix: String = "asof_"): DataFrame = {
+    val p = pack(left, right, key, ts, rightSeq, payload)
+    val w = Window.partitionBy(col("__k")).orderBy(col("__t"), col("__side"), col("__s"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     p.union
       .select(col("__side"), col("__l"),
@@ -145,23 +113,22 @@ object AsOfJoin {
     *   pass 2: the normal single-pass merge, seeded with the incoming state.
     *
     * Parallel-prefix-sum shape: work is proportional to rows per PARTITION,
-    * not rows per KEY. Both passes scan the same sorted shuffle output
-    * (persisted). Property-tested identical to the other variants incl.
-    * mega-key fixtures.
+    * not rows per KEY. Both passes pull the same `toRdd`, so pass 2 re-reads
+    * pass 1's shuffle files and no persist outlives the call ([[PrefixSum]]).
+    * Property-tested identical to the other variants incl. mega-key fixtures.
     */
   def mergedScalable(left: DataFrame, right: DataFrame, key: String, ts: String,
                      rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-                     numPartitions: Int = 0, dedup: Boolean = true): DataFrame = {
+                     numPartitions: Int = 0): DataFrame = {
     val spark = left.sparkSession
     requireKeyType(left, key, "mergedScalable")
-    val p = pack(left, right, key, ts, rightSeq, payload, dedup)
+    val p = pack(left, right, key, ts, rightSeq, payload)
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
     val sorted = p.union
       .repartitionByRange(parts, col("__k"), col("__t"), col("__side"))
-      .sortWithinPartitions(col("__k"), col("__t"), col("__side"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions(col("__k"), col("__t"), col("__side"), col("__s"))
 
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
@@ -239,86 +206,5 @@ object AsOfJoin {
       }
     }
     org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, out)
-  }
-
-  /** Variant 4 — broadcast per-key sorted timestamp index + binary search.
-    * Right side must be collect-ably small (an INDEX, not a fact table):
-    * `maxIndexRows` guards the driver — exceeding it fails fast with a
-    * pointer at AsOfPlan.asOfJoin/mergedScalable instead of OOMing at 100× data.
-    * Key must be string/integral (external-Row index values are compared
-    * against InternalRow probe values; date/timestamp/decimal externals
-    * don't equal their internal representations). */
-  def broadcastIndex(left: DataFrame, right: DataFrame, key: String, ts: String,
-                     rightSeq: String, payload: Seq[String], prefix: String = "asof_",
-                     maxIndexRows: Int = 2000000): DataFrame = {
-    val spark = left.sparkSession
-    val keyDt = left.schema(key).dataType
-    require(Set[DataType](StringType, ByteType, ShortType, IntegerType, LongType)
-        .contains(keyDt),
-      s"AsOfJoin.broadcastIndex: unsupported key type $keyDt — string/integral only")
-    val r = dedupRight(right, key, ts, rightSeq, payload)
-      .select(col(key), micros(col(ts)).as("__t"), struct(payload.map(col): _*).as("__p"))
-    // driver-side build of the index: key -> (sorted tsUs, payload rows).
-    // limit(max+1) bounds what ever reaches the driver, even on violation.
-    val collected = r.limit(maxIndexRows + 1).collect()
-    require(collected.length <= maxIndexRows,
-      s"AsOfJoin.broadcastIndex: right side exceeds maxIndexRows=$maxIndexRows " +
-        "(deduped) — this variant is for small indexes; use AsOfPlan.asOfJoin/mergedScalable")
-    val index: Map[Any, (Array[Long], Array[Row])] =
-      collected.groupBy(_.get(0)).map { case (k, rows) =>
-        val sortedRows = rows.sortBy(_.getLong(1))
-        (k, (sortedRows.map(_.getLong(1)), sortedRows.map(_.getStruct(2))))
-      }
-    val bc = spark.sparkContext.broadcast(index)
-
-    val pStructType = r.schema("__p").dataType.asInstanceOf[StructType]
-    val pTypes = payload.map(pc => StructField(s"$prefix$pc",
-      pStructType(pc).dataType, nullable = true))
-    val outSch = StructType(left.schema.fields ++ pTypes)
-    val nPay = payload.size
-    val nL = left.schema.size
-    val keyType = left.schema(key).dataType
-    // probe side stays InternalRow: tag (__kp, __tp) with a projection, then
-    // binary-search the broadcast index per row — map-only, no shuffle, and
-    // no external-Row boxing on the 100 TB side
-    val tagged = left.select(
-      struct(left.columns.map(col): _*).as("__l"),
-      col(key).as("__kp"), micros(col(ts)).as("__tp"))
-    import org.apache.spark.sql.catalyst.InternalRow
-    val rdd = tagged.queryExecution.toRdd.mapPartitions { it =>
-      val idx = bc.value
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(outSch)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val nullPay = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nPay)
-      // broadcast payload Rows -> InternalRows once per partition
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(pStructType)
-      val internIdx: Map[Any, (Array[Long], Array[InternalRow])] =
-        idx.map { case (k, (tsArr, rows)) =>
-          k -> (tsArr, rows.map(r0 => conv(r0).asInstanceOf[InternalRow]))
-        }
-      it.map { row =>
-        val l = row.getStruct(0, nL)
-        val k = row.get(1, keyType) match {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-          case other => other
-        }
-        val tUs = row.getLong(2)
-        val pay = internIdx.get(k) match {
-          case Some((tsArr, payArr)) =>
-            // greatest j with tsArr(j) <= tUs
-            var lo = 0; var hi = tsArr.length - 1; var ans = -1
-            while (lo <= hi) {
-              val mid = (lo + hi) >>> 1
-              if (tsArr(mid) <= tUs) { ans = mid; lo = mid + 1 } else hi = mid - 1
-            }
-            if (ans >= 0) payArr(ans) else nullPay
-          case None => nullPay
-        }
-        joined(l, pay)
-        proj(joined).copy(): InternalRow
-      }
-    }
-    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, outSch)
   }
 }

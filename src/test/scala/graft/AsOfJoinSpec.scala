@@ -45,16 +45,20 @@ class AsOfJoinSpec extends SparkSpec {
       l.event_id -> (best.map(_.event_id), best.map(_.value))
     }.toMap
 
-  private val variants: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
-    "windowed" -> ((l, r) => AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
-    "broadcastIndex" -> ((l, r) => AsOfJoin.broadcastIndex(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))),
-    "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))))
+  /** Every as-of kernel, for every equivalence test below. mergedScalable
+    * runs on 5 range partitions so keys span partition boundaries. */
+  private def variants(payload: Seq[String] = Seq("event_id", "value"))
+      : Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+    "windowed" -> ((l, r) => AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", payload)),
+    "mergedScalable" -> ((l, r) =>
+      AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", payload, numPartitions = 5)),
+    "planned" -> ((l, r) => graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", payload)))
 
   test("all three variants equal the in-memory oracle on random scenarios") {
     for (seed <- Seq(1L, 2L, 3L)) {
       val (left, right) = scenario(seed, nKeys = 7, nLeft = 300, nRight = 120)
       val expected = inMemory(left, right)
-      variants.foreach { case (name, f) =>
+      variants().foreach { case (name, f) =>
         assert(run(f, left, right) == expected, s"variant $name seed $seed")
       }
     }
@@ -80,27 +84,29 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("mergedScalable on random scenarios equals the in-memory oracle") {
+    // the default partition count (the session's shuffle partitions), where
+    // `variants` pins 5
     for (seed <- Seq(4L, 5L)) {
       val (left, right) = scenario(seed, nKeys = 7, nLeft = 300, nRight = 120)
       val expected = inMemory(left, right)
       val got = run((l, r) =>
-        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
-          numPartitions = 5), left, right)
+        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value")),
+        left, right)
       assert(got == expected, s"seed $seed")
     }
   }
 
   test("inclusive at equal timestamps; greatest-seq tiebreak among right dups") {
     val left = Seq(L(1, 10, t(100)))
-    val right = Seq(R(1, t(100), 1001, 5.0), R(1, t(100), 1002, 7.0), R(1, t(101), 1003, 9.0))
-    val expected = Map(10L -> (Some(1002L), Some(7.0)))
-    variants.foreach { case (name, f) => assert(run(f, left, right) == expected, name) }
+    // the greatest seq arrives first and carries the smallest value: the
+    // winner is picked by seq, not by input order or payload
+    val right = Seq(R(1, t(100), 1002, 3.0), R(1, t(100), 1001, 5.0), R(1, t(101), 1003, 9.0))
+    val expected = Map(10L -> (Some(1002L), Some(3.0)))
+    variants().foreach { case (name, f) => assert(run(f, left, right) == expected, name) }
   }
 
   test("zero leakage: mutating right rows strictly after an anchor never changes it") {
     val (left, right) = scenario(9L, nKeys = 4, nLeft = 80, nRight = 40)
-    val planned = variants.toMap.apply("planned")
-    val base = run(planned, left, right)
     // shift every right row that is strictly after ALL anchors of its key
     val maxAnchor = left.groupBy(_.user_id).view.mapValues(_.map(_.ts.getTime).max).toMap
     val mutated = right.map { r =>
@@ -108,14 +114,16 @@ class AsOfJoinSpec extends SparkSpec {
         r.copy(value = r.value + 999.0, event_id = r.event_id + 5000)
       else r
     }
-    assert(run(planned, left, mutated) == base)
+    variants().foreach { case (name, f) =>
+      assert(run(f, left, mutated) == run(f, left, right), name)
+    }
   }
 
   test("no right rows for a key → null payload") {
     val left = Seq(L(1, 1, t(10)), L(2, 2, t(10)))
     val right = Seq(R(1, t(5), 1001, 1.0))
     val expected = Map(1L -> (Some(1001L), Some(1.0)), 2L -> (None, None))
-    variants.foreach { case (name, f) => assert(run(f, left, right) == expected, name) }
+    variants().foreach { case (name, f) => assert(run(f, left, right) == expected, name) }
   }
 
   test("non-long key type (int) is supported and all variants agree") {
@@ -123,9 +131,7 @@ class AsOfJoinSpec extends SparkSpec {
     val (left, right) = scenario(11L, nKeys = 5, nLeft = 120, nRight = 60)
     val expected = inMemory(left, right)
     def asInt(df: DataFrame) = df.withColumn("user_id", col("user_id").cast("int"))
-    (variants :+ ("mergedScalable" -> ((l: DataFrame, r: DataFrame) =>
-      AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"))))
-    ).foreach { case (name, f) =>
+    variants().foreach { case (name, f) =>
       val got = f(asInt(left.toDF()), asInt(right.toDF())).collect().map { r =>
         val id = r.getLong(r.fieldIndex("event_id"))
         val aid = Option(r.get(r.fieldIndex("asof_event_id"))).map(_.asInstanceOf[Long])
@@ -148,22 +154,14 @@ class AsOfJoinSpec extends SparkSpec {
         r.getLong(r.fieldIndex("event_id")) ->
           Option(r.get(r.fieldIndex("asof_event_id"))).map(_.asInstanceOf[Long])
       }.toMap
-    val fromWindowed = runNull((l, r) =>
-      AsOfJoin.windowed(l, r, "user_id", "ts", "event_id", Seq("event_id", "value")))
     // engine semantic: null keys form ONE group (Window.partitionBy groups
     // nulls; NOT SQL equi-join NULL-never-matches) — all variants must agree,
     // including the boundary carry in mergedScalable (haveCarry flag, not a
     // null-key sentinel)
-    (0 until 200 by 2).foreach(i =>
-      assert(fromWindowed(i.toLong).contains(1000L), s"null anchor $i"))
-    assert(fromWindowed(1L).contains(1001L))
-    for ((name, f) <- Seq(
-      "mergedScalable" -> ((l: DataFrame, r: DataFrame) =>
-        AsOfJoin.mergedScalable(l, r, "user_id", "ts", "event_id", Seq("event_id", "value"),
-          numPartitions = 8)),
-      "planned" -> ((l: DataFrame, r: DataFrame) =>
-        graft.plans.AsOfPlan.asOfJoin(l, r, "user_id", "ts", "event_id", Seq("event_id", "value")))))
-      assert(runNull(f) == fromWindowed, s"null-key variant $name")
+    val expected = left.map(l => l.event_id -> Some(if (l.user_id == 0L) 1000L else 1001L)).toMap
+    variants().foreach { case (name, f) =>
+      assert(runNull(f) == expected, s"null-key variant $name")
+    }
   }
 
   test("planned variant: EXPLAIN shows the native operator, exchanges and sorts") {
@@ -183,13 +181,8 @@ class AsOfJoinSpec extends SparkSpec {
     assert(self.count() == left.size)
   }
 
-  test("broadcastIndex fails fast on an oversized right side and bad key types") {
+  test("BinaryType keys fail fast in the InternalRow merge variants") {
     val (left, right) = scenario(13L, nKeys = 3, nLeft = 20, nRight = 15)
-    val e = intercept[IllegalArgumentException] {
-      AsOfJoin.broadcastIndex(left.toDF(), right.toDF(), "user_id", "ts", "event_id",
-        Seq("event_id", "value"), maxIndexRows = 5)
-    }
-    assert(e.getMessage.contains("maxIndexRows"))
     import org.apache.spark.sql.functions.col
     val binKey = (df: DataFrame) => df.withColumn("user_id",
       col("user_id").cast("string").cast("binary"))
@@ -203,24 +196,18 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("unorderable (map) payload: dedup variants fail fast naming the column; planned joins") {
+  test("unorderable (map) payload joins in every variant") {
     import org.apache.spark.sql.functions.{col, map, lit}
     val left = Seq(L(1, 10, t(100)), L(2, 11, t(100))).toDF()
-    val right = Seq(R(1, t(50), 1001, 5.0), R(1, t(50), 1002, 7.0)).toDF()
+    val right = Seq(R(1, t(50), 1002, 7.0), R(1, t(50), 1001, 5.0)).toDF()
       .withColumn("tags", map(lit("v"), col("value")))
-    Seq[(String, () => DataFrame)](
-      "windowed" -> (() => AsOfJoin.windowed(left, right, "user_id", "ts", "event_id", Seq("tags"))),
-      "mergedScalable" -> (() =>
-        AsOfJoin.mergedScalable(left, right, "user_id", "ts", "event_id", Seq("tags")))
-    ).foreach { case (name, f) =>
-      val e = intercept[IllegalArgumentException](f())
-      assert(e.getMessage.contains("'tags'") && e.getMessage.contains("MapType"), s"$name: ${e.getMessage}")
+    // no variant has a dedup aggregate: the sort carries the greatest-seq
+    // payload without ever comparing payloads
+    variants(Seq("tags")).foreach { case (name, f) =>
+      val got = f(left, right)
+        .collect().map(r => r.getLong(r.fieldIndex("event_id")) ->
+          Option(r.getMap[String, Double](r.fieldIndex("asof_tags"))).map(_.toMap)).toMap
+      assert(got == Map(10L -> Some(Map("v" -> 7.0)), 11L -> None), name)
     }
-    // the native operator has no dedup aggregate: the sort carries the
-    // greatest-seq payload without ever comparing payloads
-    val got = graft.plans.AsOfPlan.asOfJoin(left, right, "user_id", "ts", "event_id", Seq("tags"))
-      .collect().map(r => r.getLong(r.fieldIndex("event_id")) ->
-        Option(r.getMap[String, Double](r.fieldIndex("asof_tags"))).map(_.toMap)).toMap
-    assert(got == Map(10L -> Some(Map("v" -> 7.0)), 11L -> None))
   }
 }

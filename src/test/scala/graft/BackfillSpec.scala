@@ -93,13 +93,30 @@ class BackfillSpec extends SparkSpec {
     assert(rows(outPar) == rows(outSeq), "concurrent scheduling changed the output")
     // crash counting is atomic across the pool: exactly `crashAfter` commits land
     val outC = tmp()
-    intercept[Backfill.InjectedCrash] {
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try intercept[Backfill.InjectedCrash] {
       Backfill.run(spark, root, snap, outC, compute, crashAfter = 3, maxConcurrent = 4)
-    }
+    } finally System.setErr(stderr)
+    // the crash surfaces only as the thrown InjectedCrash: nothing lands on
+    // the drained pool after the fact
+    assert(!err.toString.contains("RejectedExecutionException"), err.toString)
     assert(Backfill.completed(outC).size >= 3, "crash fired before the commit quota")
     // resume with the pool completes the remainder without recompute
     val cks = Backfill.run(spark, root, snap, outC, compute, maxConcurrent = 4)
     assert(cks.size == 16 && rows(outC) == rows(outSeq))
+  }
+
+  test("metricsJson: summary throughput is rows over the run's wall clock") {
+    // two pooled buckets of 1,000 rows that ran side by side for 1 s each
+    val cks = Seq(Backfill.Checkpoint(0L, 0, 2, 1000L, 1000L, 1000L),
+      Backfill.Checkpoint(0L, 1, 2, 1000L, 1000L, 1000L))
+    val json = Backfill.metricsJson(cks, wallMs = 1000L)
+    assert(json.startsWith(
+      """{"buckets":2,"inputRows":2000,"elapsedMs":1000,"turnsPerSec":2000.0,"""), json)
+    // per-bucket entries keep their own times
+    assert(json.contains("""{"bucket":1,"rows":1000,"ms":1000,"turnsPerSec":1000.0}"""), json)
   }
 
   test("readCommitted exposes exactly the committed buckets; partials stay invisible") {

@@ -81,6 +81,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("AsOfMerge"), s"native as-of missing:\n$p")
   }
 
+  test("q_asof_bcast runs on the native as-of operator") {
+    val p = SparkEntry.queries("q_asof_bcast")(spark, dir).queryExecution.executedPlan.toString
+    assert(p.contains("AsOfMerge"), s"native as-of missing:\n$p")
+  }
+
+  test("q_asof_windowed / q_asof_scalable: the sort picks the as-of winner, no aggregate runs") {
+    Seq("q_asof_windowed", "q_asof_scalable").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      val plan = df.queryExecution.executedPlan.toString
+      // mergedScalable's plan stops at the RDD scan of its merge; the
+      // operators behind that scan show in the lineage under their names
+      val lineage = org.apache.spark.sql.graftbridge.LineageScopes.names(df.queryExecution.toRdd)
+      Seq("HashAggregate", "SortAggregate", "ObjectHashAggregate").foreach { agg =>
+        assert(!plan.contains(agg), s"$q plans $agg:\n$plan")
+        assert(!lineage.exists(_.contains(agg)), s"$q runs $agg: ${lineage.mkString(", ")}")
+      }
+    }
+  }
+
   // q_feature_importance constructs by TRAINING a model (driver-side
   // artifact; its final plan is a LocalTableScan) — pointless to plan-audit
   // and expensive to build twice, so both full-surface sweeps skip it.
